@@ -9,7 +9,7 @@ covers operators A3–A9:
 
 * A4 null filter (drop or fail, ``ConsumerRecordConverter.java:43-51``)
 * A3/A6/A7 proto decode with per-type conversion (pure-Python wire codec
-  in an Arrow-batched ``mapInPandas`` — the JVM ``from_protobuf`` is used
+  in an Arrow-native ``mapInArrow`` — the JVM ``from_protobuf`` is used
   instead when the spark-protobuf jar is present)
 * A5 column-mapping projection (compiled select, Catalyst-prunable)
 * A8 metadata enrichment (five Kafka metadata columns, optional namespace)
@@ -120,17 +120,17 @@ class ProtoIngest:
             ]
         )
 
-    def _decode_map_in_pandas(self, df: DataFrame) -> DataFrame:
-        """Arrow-native decode boundary. Despite the historical name this
-        is ``mapInArrow`` since round 13: the pandas form paid a full
-        Arrow→pandas→Arrow round-trip for the four passthrough Kafka
-        columns (timestamp cells materialized as pandas Timestamps both
-        ways) plus per-row Series iteration — measured ~40% of the
-        decode-path plateau. Here the passthrough columns are re-emitted
-        ZERO-COPY from the input record batch, the value column is
-        extracted once via ``to_pylist`` (C loop, no per-row pandas
-        boxing, no ``bytes()`` copy), and the decoded dicts go straight
-        into ``pa.array`` with the exact Arrow type Spark expects."""
+    def _decode_map_in_arrow(self, df: DataFrame) -> DataFrame:
+        """Arrow-native decode boundary (``mapInArrow``). The earlier
+        ``mapInPandas`` form paid a full Arrow→pandas→Arrow round-trip for
+        the four passthrough Kafka columns (timestamp cells materialized as
+        pandas Timestamps both ways) plus per-row Series iteration —
+        measured ~40% of the decode-path plateau. Here the passthrough
+        columns are re-emitted ZERO-COPY from the input record batch, the
+        value column is extracted once via ``to_pylist`` (C loop, no
+        per-row pandas boxing, no ``bytes()`` copy), and the decoded dicts
+        go straight into ``pa.array`` with the exact Arrow type Spark
+        expects."""
         schema = self.schema
         fail_unknown = self.settings.fail_on_unknown_fields
         out_schema = self.decoded_schema()
@@ -250,9 +250,13 @@ class ProtoIngest:
 
     # -- assembled pipeline -------------------------------------------------
 
-    def apply(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def apply(self, df: DataFrame) -> IngestSplit:
         """(valid, invalid): valid = mapped columns + metadata; invalid =
         DLQ shape {key?, topic, partition, offset, timestamp, error}.
+
+        Both frames are projections of one decoded frame, returned on the
+        split's ``.decoded``; nothing is persisted here. A micro-batch
+        writer persists ``.decoded`` so the sink's writes share one decode.
 
         ``fail_on_null_message`` / ``fail_on_deserialize_error`` turn the
         respective error classes into hard failures at sink time by
@@ -267,7 +271,7 @@ class ProtoIngest:
         if self.use_jvm_decode(df.sparkSession):
             decoded = self._decode_from_protobuf(df)
         else:
-            decoded = self._decode_map_in_pandas(df)
+            decoded = self._decode_map_in_arrow(df)
         is_null_err = F.col("error") == "null message"
         fatal = (is_null_err & F.lit(self.settings.fail_on_null_message)) | (
             F.col("error").startswith("DESERIALIZE")
@@ -288,4 +292,16 @@ class ProtoIngest:
             decoded.filter(F.col("error").isNull())
             .select(*mapped, *self._metadata_columns())
         )
-        return valid, invalid
+        return IngestSplit(valid, invalid, decoded)
+
+
+class IngestSplit(tuple):
+    """``(valid, invalid)`` that also carries the frame both are projected
+    from on ``.decoded``; unpacks as a plain 2-tuple."""
+
+    decoded: DataFrame
+
+    def __new__(cls, valid: DataFrame, invalid: DataFrame, decoded: DataFrame) -> IngestSplit:
+        split = super().__new__(cls, (valid, invalid))
+        split.decoded = decoded
+        return split

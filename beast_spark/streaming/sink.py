@@ -17,6 +17,11 @@ GCS DLQ. Differences by design:
   ``insert_id = topic_partition_offset`` so replays of a micro-batch
   (at-least-once) can be deduplicated downstream — plus idempotent
   batch-overwrite per ``batchId`` when used via ``foreach_batch_writer``.
+* One micro-batch is one decode and two writes: the fatal check, then
+  ONE DLQ write of the invalid rows ∪ the OOB rows, then the retried
+  warehouse write. ``foreach_batch_writer`` persists the decoded frame
+  all three read (the reference's converter runs once per record too,
+  ``ConsumerRecordConverter.java:39-105``).
 * Retry/backoff matches ``sink/executor/RetryExecutor.java:38-58`` +
   ``backoff/ExponentialBackOffProvider.java:20-32``.
 * DLQ layout matches ``sink/dlq/gcs/GCSErrorWriter.java:40-91``:
@@ -29,6 +34,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,13 +55,47 @@ class MultiException(RuntimeError):
         self.errors = errors
 
 
-class MultiSink:
+class BatchWriter:
+    """The ``foreachBatch`` hook shared by :class:`WarehouseSink` and
+    :class:`MultiSink`; subclasses provide ``push(valid, invalid)``."""
+
+    def foreach_batch_writer(self, ingest_apply=None):
+        """foreachBatch hook: decode (optional) → split → push.
+
+        The hook owns the micro-batch frame, so it persists the decoded
+        frame that ``valid`` and ``invalid`` share (``IngestSplit.decoded``)
+        for the length of the push: every write of the batch reads one
+        decode, and the frame is unpersisted before the hook returns.
+
+        Structured Streaming's checkpoint makes the offset commit atomic
+        per micro-batch — this single hook replaces the reference's read
+        queue, BQ worker pool, ack set, offset clubbing and watchdog
+        (A10, A11, A18–A21; SURVEY.md §3.1 bottom half).
+        """
+
+        def write(batch_df: DataFrame, batch_id: int) -> None:
+            split = ingest_apply(batch_df) if ingest_apply is not None else (batch_df, None)
+            decoded = getattr(split, "decoded", None)
+            if decoded is not None:
+                decoded.persist()
+            try:
+                self.push(*split)
+            finally:
+                if decoded is not None:
+                    decoded.unpersist()
+
+        return write
+
+
+class MultiSink(BatchWriter):
     """Fan-out one batch to N sinks (A10, ``sink/MultiSink.java:19-26``).
 
-    The batch frame is persisted once so N writes don't recompute the
-    lineage; every sink is attempted even after a failure, and all
-    failures surface together as :class:`MultiException` — matching the
-    reference's collect-then-raise contract.
+    A direct ``push`` persists the valid frame once so N writes don't
+    recompute its lineage; through :meth:`foreach_batch_writer` the whole
+    decode is persisted, so the N DLQ writes share it too. Every sink is
+    attempted even after a failure, and all failures surface together as
+    :class:`MultiException` — matching the reference's collect-then-raise
+    contract.
     """
 
     def __init__(self, sinks: list["WarehouseSink"]) -> None:
@@ -74,16 +114,6 @@ class MultiSink:
                 raise MultiException(errors)
         finally:
             df.unpersist()
-
-    def foreach_batch_writer(self, ingest_apply=None):
-        def write(batch_df: DataFrame, batch_id: int) -> None:
-            if ingest_apply is not None:
-                valid, invalid = ingest_apply(batch_df)
-            else:
-                valid, invalid = batch_df, None
-            self.push(valid, invalid)
-
-        return write
 
 
 def with_insert_id(df: DataFrame) -> DataFrame:
@@ -112,7 +142,7 @@ def classify_oob(
 
 
 @dataclass
-class WarehouseSink:
+class WarehouseSink(BatchWriter):
     """Parquet/warehouse appender with retry + DLQ, usable directly on a
     batch frame or via :meth:`foreach_batch_writer` on a stream."""
 
@@ -258,47 +288,43 @@ class WarehouseSink:
         """One batch disposition (BqSink.java:41-80 shape):
 
         1. fatal invalid rows ⇒ raise (stop the query);
-        2. non-fatal invalid rows ⇒ DLQ;
-        3. OOB-partition rows ⇒ DLQ; in-bounds rows ⇒ warehouse, with
-           exponential-backoff retry around the write.
-        Returns the number of write attempts used.
+        2. non-fatal invalid rows ∪ OOB-partition rows ⇒ ONE DLQ write
+           (each JSON line keeps only its own non-null fields);
+        3. in-bounds rows ⇒ warehouse, with exponential-backoff retry
+           around the write.
+
+        Via :meth:`foreach_batch_writer` all of it reads one persisted
+        decode of the micro-batch. Returns the number of write attempts
+        used.
         """
+        dlq: list[DataFrame] = []
         if invalid is not None:
             if "fatal" in invalid.columns:
                 if invalid.filter(F.col("fatal")).limit(1).count() > 0:
                     raise FatalIngestError("fatal invalid rows in batch")
-                self.write_dlq(invalid.drop("fatal"))
-            else:
-                self.write_dlq(invalid)
+                invalid = invalid.drop("fatal")
+            dlq.append(invalid)
 
         out = with_insert_id(df) if "message_topic" in df.columns else df
         if self.partition_col:
             good, oob_rows = classify_oob(out, self.partition_col, self.oob)
-            if self.dlq_path and oob_rows.limit(1).count() > 0:
+            if self.dlq_path:
                 # Batch frames without Kafka metadata (or with a metadata
                 # namespace) lack topic/insert_id — fall back to NULLs so
                 # direct batch use works as the class docstring promises.
-                topic = (
-                    F.col("message_topic")
-                    if "message_topic" in oob_rows.columns
-                    else F.lit(None).cast("string")
-                )
-                iid = (
-                    F.col("insert_id")
-                    if "insert_id" in oob_rows.columns
-                    else F.lit(None).cast("string")
-                )
-                (
-                    oob_rows.withColumn("error", F.lit("OOB partition date"))
-                    .withColumn("dt", F.date_format(F.current_timestamp(), "yyyy-MM-dd"))
-                    .withColumn("topic", topic)
-                    .withColumn("insert_id", iid)
-                    .select("topic", "dt", "error", "insert_id")
-                    .write.mode("append")
-                    .partitionBy("dt", "topic")
-                    .json(self.dlq_path)
+                null = F.lit(None).cast("string")
+                dlq.append(
+                    oob_rows.select(
+                        (F.col("message_topic") if "message_topic" in oob_rows.columns else null)
+                        .alias("topic"),
+                        F.lit("OOB partition date").alias("error"),
+                        (F.col("insert_id") if "insert_id" in oob_rows.columns else null)
+                        .alias("insert_id"),
+                    )
                 )
             out = good.withColumn("dt", F.to_date(F.col(self.partition_col)))
+        if dlq:
+            self.write_dlq(reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dlq))
         return self._retrying_write(out)
 
     def push_with_row_errors(self, df: DataFrame, insert_fn) -> None:
@@ -353,21 +379,3 @@ class WarehouseSink:
                 if attempts >= self.retry.max_push_attempts:
                     raise
                 time.sleep(self.retry.delay_ms(attempts - 1) / 1000.0)
-
-    def foreach_batch_writer(self, ingest_apply=None):
-        """foreachBatch hook: decode (optional) → split → push.
-
-        Structured Streaming's checkpoint makes the offset commit atomic
-        per micro-batch — this single hook replaces the reference's read
-        queue, BQ worker pool, ack set, offset clubbing and watchdog
-        (A10, A11, A18–A21; SURVEY.md §3.1 bottom half).
-        """
-
-        def write(batch_df: DataFrame, batch_id: int) -> None:
-            if ingest_apply is not None:
-                valid, invalid = ingest_apply(batch_df)
-            else:
-                valid, invalid = batch_df, None
-            self.push(valid, invalid)
-
-        return write

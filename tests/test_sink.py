@@ -5,15 +5,23 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from beast_spark.config import RetrySettings
+from beast_spark.plans.protowire import encode_message
 from beast_spark.streaming.ingest import ProtoIngest
-from beast_spark.streaming.sink import FatalIngestError, WarehouseSink, classify_oob, with_insert_id
-from tests.fixtures import KAFKA_DDL, TEST_SCHEMA, kafka_rows
+from beast_spark.streaming.sink import (
+    FatalIngestError,
+    MultiSink,
+    WarehouseSink,
+    classify_oob,
+    with_insert_id,
+)
+from tests.fixtures import KAFKA_DDL, TEST_SCHEMA, kafka_rows, sample_order
 
 
 @pytest.fixture
@@ -420,8 +428,6 @@ def test_multisink_fans_out_to_parquet_and_jdbc(spark, tmp_path, valid_df):
     """A10 heterogeneous fan-out (the reference pushes one batch to
     BigQuery AND the GCS error path): one persist-once push lands the
     same batch in a parquet warehouse and a real JDBC table."""
-    from beast_spark.streaming.sink import MultiSink
-
     opts = _derby(spark, tmp_path)
     multi = MultiSink(
         [
@@ -444,3 +450,88 @@ def test_write_metrics_observed_without_extra_scan(spark, tmp_path, valid_df):
     sink = WarehouseSink(table_path=str(tmp_path / "wh"))
     sink.push(valid_df)
     assert sink.last_write_metrics == {"rows_written": valid_df.count()}
+
+
+def _micro_batch_source(spark, src_dir) -> None:
+    """One poll's worth of Kafka-shaped rows: 4 valid, 1 null, 1 malformed
+    and 1 valid row whose partition date is >1825 days old (OOB)."""
+    now = dt.datetime.now().replace(microsecond=0)
+    orders = [dict(sample_order(i), created_at=now - dt.timedelta(days=1)) for i in range(4)]
+    orders.append(dict(sample_order(4), created_at=now - dt.timedelta(days=3000)))
+    rows = [
+        (b"k", encode_message(o, TEST_SCHEMA), "orders", 0, i, now)
+        for i, o in enumerate(orders)
+    ]
+    rows.append((b"k", None, "orders", 0, 5, now))
+    rows.append((b"k", b"\xff\xff", "orders", 0, 6, now))
+    spark.createDataFrame(rows, KAFKA_DDL).write.parquet(str(src_dir / "poll0"))
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _drain(spark, tmp_path, sink, ing):
+    schema = spark.createDataFrame([], KAFKA_DDL).schema
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "src") + "/*")
+    return (
+        stream.writeStream.foreachBatch(sink.foreach_batch_writer(ing.apply))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+@pytest.mark.parametrize("fan_out", [False, True], ids=["warehouse", "multisink"])
+def test_micro_batch_decodes_once_and_writes_dlq_once(spark, tmp_path, fan_out):
+    """The writer persists the decode that valid and invalid share, so a
+    micro-batch runs its decode once: the DLQ write (invalid ∪ OOB in one
+    write) and the warehouse write both read it, also behind a MultiSink.
+    Each DLQ line keeps only the fields of its kind; nothing stays
+    persisted afterwards."""
+    _micro_batch_source(spark, tmp_path / "src")
+    before = _persisted(spark)
+    sink = WarehouseSink(
+        table_path=str(tmp_path / "wh"), dlq_path=str(tmp_path / "dlq"), partition_col="created_at"
+    )
+    q = _drain(spark, tmp_path, MultiSink([sink]) if fan_out else sink, ProtoIngest(TEST_SCHEMA))
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    assert spark.read.parquet(str(tmp_path / "wh")).count() == 4
+    keys: dict[str, list] = {}
+    for path in glob.glob(str(tmp_path / "dlq" / "dt=*" / "topic=orders" / "*.json")):
+        with open(path) as fh:
+            for line in fh:
+                rec = json.loads(line)
+                kind = rec["error"].split(":")[0]
+                keys.setdefault(kind, []).append(sorted(rec))
+    assert keys == {
+        "null message": [["error", "offset", "partition", "timestamp"]],
+        "DESERIALIZE": [["error", "offset", "partition", "timestamp"]],
+        "OOB partition date": [["error", "insert_id"]],
+    }
+    # One decode, one DLQ write, one warehouse write; a decode per write
+    # (four actions over an unpersisted lineage) runs six jobs.
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 3
+    assert _persisted(spark) <= before
+
+
+def test_fatal_micro_batch_fails_without_writes_or_cache(spark, tmp_path):
+    """A fatal row still stops the batch through the writer: nothing lands
+    in the warehouse or the DLQ, and the persisted decode is released."""
+    from beast_spark.config import IngestSettings
+
+    _micro_batch_source(spark, tmp_path / "src")
+    before = _persisted(spark)
+    sink = WarehouseSink(
+        table_path=str(tmp_path / "wh"), dlq_path=str(tmp_path / "dlq"), partition_col="created_at"
+    )
+    ing = ProtoIngest(TEST_SCHEMA, settings=IngestSettings(fail_on_deserialize_error=True))
+    q = _drain(spark, tmp_path, sink, ing)
+    with pytest.raises(Exception, match="FatalIngestError"):
+        q.awaitTermination(120)
+    assert not os.path.exists(tmp_path / "wh")
+    assert not os.path.exists(tmp_path / "dlq")
+    assert _persisted(spark) <= before
