@@ -1365,17 +1365,7 @@ def _run_outer_join_stream(spark, base: str, glob: str, schema, how: str) -> Dat
             "click_id",
             "buy_id",
         )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", f"{base}/out")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("outer-join streaming twin did not finish within 600s")
+        _run_to_parquet(joined, base)
 
     import glob as globmod
 

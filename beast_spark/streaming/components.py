@@ -60,13 +60,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beast_spark.operators.dedup import dedup_clusters
-from beast_spark.streaming.swap import ManifestSwapTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["ComponentsMaintainer"]
 
 
-class ComponentsMaintainer(ManifestSwapTable):
-    """Owns one manifest-committed state directory (members+aliases)."""
+class ComponentsMaintainer(Maintainer, ManifestSwapTable):
+    """Owns one manifest-committed state directory (members+aliases),
+    fed by a (doc1, doc2) pair stream."""
 
     def __init__(self, path: str, n_shards: int = 16, gc_grace_gens: int = 0):
         ManifestSwapTable.__init__(
@@ -104,10 +105,8 @@ class ComponentsMaintainer(ManifestSwapTable):
 
     # -- the foreachBatch body ---------------------------------------------
 
-    def apply_batch(self, pairs_df: DataFrame, batch_id: int) -> None:
+    def _absorb(self, pairs_df: DataFrame, batch_id: int) -> None:
         """Absorb one micro-batch of near-dup pairs (doc1, doc2)."""
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
         spark = pairs_df.sparkSession
         # the batch's pairs feed the node probe, the quotient build and
         # the members append — persist so the (possibly expensive)
@@ -251,15 +250,3 @@ class ComponentsMaintainer(ManifestSwapTable):
                 new_aliases.unpersist()
         finally:
             labeled.unpersist()
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, pairs: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible) over a
-        (doc1, doc2) pair stream."""
-        return (
-            pairs.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

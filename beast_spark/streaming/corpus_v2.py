@@ -7,10 +7,11 @@ state suffices. v2 adds the boilerplate gate, and that one is
 RETROACTIVE: a chunk becomes boilerplate when its SECOND distinct
 document arrives, which can disqualify a document accepted batches ago.
 No append-mode streaming operator can un-emit a row, so v2 is a
-``foreachBatch`` incremental maintainer in the mould of
-``streaming/rollup.py`` — cross-batch semantic state lives in one
-swap-committed directory (exactly-once via the shared ledger protocol
-of ``streaming/swap.py``; the stream itself carries no engine state),
+``foreachBatch`` incremental maintainer on the shared lifecycle
+(``streaming/swap.py::Maintainer``) — cross-batch semantic state lives
+in one swap-committed directory (exactly-once via the shared ledger
+protocol of ``streaming/swap.py``; the stream itself carries no engine
+state),
 holding three sub-tables:
 
 * ``signals``  — one slim row per document ever seen: gate signals +
@@ -56,12 +57,12 @@ from beast_spark.operators.quality import (
     repetition_signals,
 )
 from beast_spark.queries._util import rnd
-from beast_spark.streaming.swap import SwapCommittedTable
+from beast_spark.streaming.swap import Maintainer, SwapCommittedTable
 
 __all__ = ["CorpusV2Maintainer"]
 
 
-class CorpusV2Maintainer(SwapCommittedTable):
+class CorpusV2Maintainer(Maintainer, SwapCommittedTable):
     """Owns one swap-committed state directory (signals/chunks/postings)."""
 
     def __init__(
@@ -90,9 +91,7 @@ class CorpusV2Maintainer(SwapCommittedTable):
 
     # -- the foreachBatch body -------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = batch_df.select("doc_id", "text")
 
@@ -247,15 +246,4 @@ class CorpusV2Maintainer(SwapCommittedTable):
                 F.sum("n_tokens").alias("total_tokens"),
                 F.sum("doc_id").alias("id_checksum"),
             )
-        )
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, docs: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            docs.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -66,12 +66,12 @@ from beast_spark.operators.quality import (
     span_cleaned,
     window_hashes,
 )
-from beast_spark.streaming.swap import ManifestSwapTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["CorpusV3Maintainer", "CorpusV3PointerMaintainer"]
 
 
-class CorpusV3Maintainer(ManifestSwapTable):
+class CorpusV3Maintainer(Maintainer, ManifestSwapTable):
     """Owns one manifest-committed state directory
     (docs/whcounts/postings/signals/flagged)."""
 
@@ -134,9 +134,7 @@ class CorpusV3Maintainer(ManifestSwapTable):
             .join(rep, "doc_id", "left")
         )
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         w = self.window
         bdocs = batch_df.filter(F.size(F.split("text", " ")) >= w)
@@ -391,17 +389,6 @@ class CorpusV3Maintainer(ManifestSwapTable):
             )
         )
 
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, docs: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            docs.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
 
 class CorpusV3PointerMaintainer(CorpusV3Maintainer):
     """The warehouse form of v3's ``docs`` state: POINTERS, not text.
@@ -451,9 +438,4 @@ class CorpusV3PointerMaintainer(CorpusV3Maintainer):
         """Start the maintenance stream; captures each row's source file
         from the hidden ``_metadata`` column of the file source."""
         withptr = docs.withColumn("src_path", F.col("_metadata.file_path"))
-        return (
-            withptr.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return super().stream_from(withptr, checkpoint)

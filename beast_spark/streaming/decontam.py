@@ -6,7 +6,7 @@ long after the training corpus is frozen, and each one RETROACTIVELY
 contaminates every training document it shares an 8-token gram with.
 The batch form (q109 / ``operators/decontam.py::decontam_stats``)
 recomputes the full overlap; this maintainer is the continuous form,
-the ``foreachBatch`` swap-ledger pattern of ``streaming/corpus_v2.py``
+the shared ``foreachBatch`` lifecycle (``streaming/swap.py::Maintainer``)
 applied to q109's semantics. State (one swap-committed dir, all
 sub-tables + ledger flip in a single atomic rename):
 
@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from beast_spark.operators.decontam import doc_gram_postings
 from beast_spark.streaming.swap import (
+    Maintainer,
     SwapCommittedTable,
     artifact_fingerprint,
     check_json_meta,
@@ -64,7 +65,7 @@ from beast_spark.streaming.swap import (
 __all__ = ["DecontamMaintainer"]
 
 
-class DecontamMaintainer(SwapCommittedTable):
+class DecontamMaintainer(Maintainer, SwapCommittedTable):
     """Owns one swap-committed state directory
     (train_postings/eval_grams/eval_docs/contam)."""
 
@@ -97,9 +98,7 @@ class DecontamMaintainer(SwapCommittedTable):
 
     # -- the foreachBatch body -------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
 
         ppath = self.path + ".train_postings"
@@ -228,15 +227,3 @@ class DecontamMaintainer(SwapCommittedTable):
             )
         finally:
             flagged.unpersist()
-
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, eval_docs: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            eval_docs.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

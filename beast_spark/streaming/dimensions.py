@@ -34,16 +34,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from beast_spark.operators.scd import scd2_apply_increment, scd2_from_changelog
 from beast_spark.sources.versioned import VersionedTable
-from beast_spark.streaming.swap import ManifestSwapTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["Scd2Maintainer", "VersionedScd2Maintainer"]
 
 
-class _Scd2Logic:
+class _Scd2Logic(Maintainer):
     """The maintenance algebra, independent of the commit backend
     (same factoring as ``streaming/rollup.py::_RollupLogic``).
     Subclasses provide ``_read_for_batch`` (the history rows the
-    increment may touch) and ``_commit_history``."""
+    increment may touch) and ``_commit_history``.
+
+    The changelog must arrive in per-key order (file/Kafka sources do
+    within a key's partition) — out-of-order backfills need a full
+    rebuild, same contract as ``scd2_apply_increment``."""
 
     key_cols: list
     attr_col: str
@@ -68,9 +72,7 @@ class _Scd2Logic:
 
     # -- the foreachBatch body -------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         history = self._read_for_batch(spark, batch_df)
         if history is None:
@@ -82,20 +84,6 @@ class _Scd2Logic:
                 history, batch_df, self.key_cols, self.attr_col, self.order_cols
             )
         self._commit_history(updated, batch_df, batch_id)
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, changelog: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible). The
-        changelog must arrive in per-key order (file/Kafka sources do
-        within a key's partition) — out-of-order backfills need a full
-        rebuild, same contract as scd2_apply_increment."""
-        return (
-            changelog.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
 
 class Scd2Maintainer(_Scd2Logic, ManifestSwapTable):

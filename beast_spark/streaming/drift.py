@@ -42,18 +42,14 @@ instead of crashing — a brand-new event type IS the drift signal.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from beast_spark.queries._util import rnd
 from beast_spark.streaming.swap import (
-    SwapCommittedTable,
+    AdditiveStatsMaintainer,
     artifact_fingerprint,
-    check_json_meta,
-    write_json_meta,
 )
 
 __all__ = [
@@ -201,8 +197,11 @@ def exact_ks(
     )
 
 
-class DriftMaintainer(SwapCommittedTable):
-    """Owns one swap-committed state directory (counts)."""
+class DriftMaintainer(AdditiveStatsMaintainer):
+    """Owns one swap-committed state directory (counts). Choreography
+    (replay no-op, recovery-before-guard, marker-before-first-commit,
+    guarded reads) comes from the shared
+    ``streaming/swap.py::AdditiveStatsMaintainer`` base."""
 
     def __init__(
         self,
@@ -214,7 +213,7 @@ class DriftMaintainer(SwapCommittedTable):
         n_buckets: int = 10,
         fingerprint=None,
     ) -> None:
-        SwapCommittedTable.__init__(self, path)
+        AdditiveStatsMaintainer.__init__(self, path)
         # storage-native fingerprint hook, as in DecontamMaintainer
         self.fingerprint = fingerprint or artifact_fingerprint
         self.baseline_path = baseline_path
@@ -232,41 +231,28 @@ class DriftMaintainer(SwapCommittedTable):
             "n_buckets": self.n_buckets,
         }
 
-    def read_counts(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_sub(spark, "counts")
+    def _guard_hint(self) -> str:
+        return (
+            "the frozen baseline or bucket config changed — rebuild "
+            "the state against the new reference (fresh state dir + "
+            "checkpoint)."
+        )
 
-    # -- the foreachBatch body -------------------------------------------
+    def _empty_msg(self) -> str:
+        return "DriftMaintainer: no events ingested yet"
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
-        self._recover()
-        meta = self._meta()
-        if os.path.exists(self.path):
-            check_json_meta(
-                self.path + ".meta.json",
-                meta,
-                f"DriftMaintainer (state at {self.path})",
-                "the frozen baseline or bucket config changed — rebuild "
-                "the state against the new reference (fresh state dir + "
-                "checkpoint).",
-            )
-        spark = batch_df.sparkSession
-        inc = bucket_histogram(
+    def _batch_counts(self, spark: SparkSession, batch_df: DataFrame) -> DataFrame:
+        return bucket_histogram(
             batch_df, self.key_col, self.value_col, self.width, self.n_buckets
         )
-        counts = self.read_counts(spark)
-        merged = (
-            inc
-            if counts is None
-            else counts.unionByName(inc)
-            .groupBy("key", "bucket")
-            .agg(F.sum("n").alias("n"))
+
+    def _merge(self, counts: DataFrame, inc: DataFrame) -> DataFrame:
+        return counts.unionByName(inc).groupBy("key", "bucket").agg(
+            F.sum("n").alias("n")
         )
-        if not os.path.exists(self.path):
-            # marker BEFORE the first commit (see streaming/ivf.py)
-            write_json_meta(self.path + ".meta.json", meta)
-        self.commit_frames({"counts": merged}, batch_id)
+
+    def read_counts(self, spark: SparkSession) -> DataFrame | None:
+        return self._read_sub(spark, self._SUB)
 
     # -- reads ------------------------------------------------------------
 
@@ -277,23 +263,8 @@ class DriftMaintainer(SwapCommittedTable):
         FIRST: the read path is exactly where a baseline rewritten in
         place (no new batch has run, so apply_batch's guard never
         fired) would otherwise report drift against the wrong
-        reference silently. Recovery runs FIRST: a crash between the
-        swap's two renames leaves the live dir missing, and an
-        exists()-gated guard would be skipped while read_counts'
-        internal recovery then served the counts unvalidated."""
-        self._recover()
-        if os.path.exists(self.path):
-            check_json_meta(
-                self.path + ".meta.json",
-                self._meta(),
-                f"DriftMaintainer (state at {self.path})",
-                "the frozen baseline or bucket config changed — rebuild "
-                "the state against the new reference (fresh state dir + "
-                "checkpoint).",
-            )
-        counts = self.read_counts(spark)
-        if counts is None:
-            raise ValueError("DriftMaintainer: no events ingested yet")
+        reference silently."""
+        counts = self._read_counts_guarded(spark)
         return spark.read.parquet(self.baseline_path), counts
 
     def read_psi(self, spark: SparkSession) -> DataFrame:
@@ -338,14 +309,3 @@ class DriftMaintainer(SwapCommittedTable):
 
             baseline, counts = rebin(baseline), rebin(counts)
         return grid_ks_from_histograms(baseline, counts)
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, events: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            events.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

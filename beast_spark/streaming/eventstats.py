@@ -44,12 +44,12 @@ from beast_spark.operators.eventwindows import (
     numbered_sessions,
     session_intervals,
 )
-from beast_spark.streaming.swap import ManifestSwapTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["HourlyWindowStatsMaintainer", "SessionStatsMaintainer"]
 
 
-class _ShardedMergeMaintainer(ManifestSwapTable):
+class _ShardedMergeMaintainer(Maintainer, ManifestSwapTable):
     """Shared choreography for keyed-merge maintainers whose state
     grows with the data: per batch, build the increment rows, read only
     the touched shards, merge, and commit the replacement shards + the
@@ -81,9 +81,7 @@ class _ShardedMergeMaintainer(ManifestSwapTable):
                 "rebuild the state (fresh dir + checkpoint)."
             )
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         self._guard()
         spark = batch_df.sparkSession
         # the increment is read twice (touched-shard probe + merge) —
@@ -120,15 +118,6 @@ class _ShardedMergeMaintainer(ManifestSwapTable):
         if state is None:
             raise ValueError(f"{type(self).__name__}: nothing ingested yet")
         return state
-
-    def stream_from(self, rows: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            rows.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
 
 class HourlyWindowStatsMaintainer(_ShardedMergeMaintainer):

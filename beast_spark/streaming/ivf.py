@@ -100,6 +100,7 @@ from beast_spark.operators.similarity import (
     quantize_codes,
 )
 from beast_spark.streaming.swap import (
+    Maintainer,
     ManifestSwapTable,
     artifact_fingerprint,
 )
@@ -111,7 +112,7 @@ __all__ = ["IvfIndexMaintainer"]
 _WM_UNSET = object()
 
 
-class IvfIndexMaintainer(ManifestSwapTable):
+class IvfIndexMaintainer(Maintainer, ManifestSwapTable):
     """Owns one manifest-committed state directory
     (assigned+vectors[+codes][+pq])."""
 
@@ -296,9 +297,7 @@ class IvfIndexMaintainer(ManifestSwapTable):
 
     # -- the foreachBatch body -------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         meta = self._meta()
         fresh = self._load_manifest() is None
         if not fresh:
@@ -867,14 +866,3 @@ class IvfIndexMaintainer(ManifestSwapTable):
         self.centroids_path = centroids_path
         self.codebook_path = codebook_path
         self.pq_codebooks_path = pq_codebooks_path
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, vectors: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            vectors.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

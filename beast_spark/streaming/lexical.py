@@ -42,12 +42,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beast_spark.operators.retrieval import bm25_from_stats, doc_term_stats
-from beast_spark.streaming.swap import ManifestSwapTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["LexicalIndexMaintainer"]
 
 
-class LexicalIndexMaintainer(ManifestSwapTable):
+class LexicalIndexMaintainer(Maintainer, ManifestSwapTable):
     """Owns one manifest-committed state directory
     (postings + doclen + consts)."""
 
@@ -133,9 +133,7 @@ class LexicalIndexMaintainer(ManifestSwapTable):
 
     # -- the foreachBatch body --------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover()
         self._check_marker()
         spark = batch_df.sparkSession
@@ -326,15 +324,4 @@ class LexicalIndexMaintainer(ManifestSwapTable):
         return bm25_from_stats(
             tf, lens, consts.select("n_docs", "total_dl"),
             self.id_col, k1, b, round_digits,
-        )
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, docs: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            docs.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

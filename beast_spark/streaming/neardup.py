@@ -48,12 +48,12 @@ from beast_spark.operators.similarity import (
     incremental_multitable_neardup_pairs,
     multitable_planes,
 )
-from beast_spark.streaming.swap import ManifestSwapTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["EmbeddingNearDupMaintainer"]
 
 
-class EmbeddingNearDupMaintainer(ManifestSwapTable):
+class EmbeddingNearDupMaintainer(Maintainer, ManifestSwapTable):
     """Owns one manifest-committed state directory
     (postings+vectors+pairs)."""
 
@@ -215,8 +215,9 @@ class EmbeddingNearDupMaintainer(ManifestSwapTable):
                 "a multi-table postings+vectors index. Rebuild the state "
                 "from the source stream (fresh state dir + checkpoint)."
             )
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+        super().apply_batch(batch_df, batch_id)
+
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         raw_postings = self._read_sub(spark, "postings")
         have_postings = raw_postings is not None
@@ -471,15 +472,4 @@ class EmbeddingNearDupMaintainer(ManifestSwapTable):
                 "pairs": (["vec1", "vec2"], None, False),
                 "ids": ([self.id_col], self.id_col, True),
             },
-        )
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, vectors: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            vectors.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from beast_spark.operators.rollup import daily_rollup, merge_rollups
 from beast_spark.sources.versioned import VersionedTable
-from beast_spark.streaming.swap import SwapCommittedTable
+from beast_spark.streaming.swap import Maintainer, SwapCommittedTable
 
 __all__ = [
     "CentroidMaintainer",
@@ -42,8 +42,14 @@ __all__ = [
 ]
 
 
-class _RollupLogic:
-    """The maintenance algebra, independent of the commit backend.
+class _RollupLogic(Maintainer):
+    """The maintenance algebra, independent of the commit backend: per
+    batch, build the increment, read the stored table, merge (or take
+    the increment before the first commit) and commit. The default
+    hooks are the daily rollup's; :class:`SketchMaintainer` and
+    :class:`CentroidMaintainer` supply their own ``_increment`` /
+    ``_merge``. Every merge here is commutative and associative, so any
+    batch order converges — the merge is order-insensitive.
 
     Host classes provide the storage protocol — ``applied_batches()``,
     ``read_table(spark)`` (None before first commit), and
@@ -58,28 +64,17 @@ class _RollupLogic:
     def read_rollup(self, spark: SparkSession) -> DataFrame | None:
         return self.read_table(spark)
 
-    # -- the foreachBatch body -------------------------------------------
+    def _increment(self, batch_df: DataFrame) -> DataFrame:
+        return daily_rollup(batch_df, self.key_cols, self.ts_col, self.value_col)
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
-        spark = batch_df.sparkSession
-        inc = daily_rollup(batch_df, self.key_cols, self.ts_col, self.value_col)
-        existing = self.read_table(spark)
-        updated = inc if existing is None else merge_rollups(existing, inc)
+    def _merge(self, existing: DataFrame, inc: DataFrame) -> DataFrame:
+        return merge_rollups(existing, inc)
+
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
+        inc = self._increment(batch_df)
+        existing = self.read_table(batch_df.sparkSession)
+        updated = inc if existing is None else self._merge(existing, inc)
         self.commit(updated, batch_id)
-
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, events: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible). Any
-        batch order converges — the merge is order-insensitive."""
-        return (
-            events.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
 
 class RollupMaintainer(_RollupLogic, SwapCommittedTable):
@@ -119,7 +114,7 @@ class VersionedRollupMaintainer(_RollupLogic, VersionedTable):
         self.value_col = value_col
 
 
-class SketchMaintainer(SwapCommittedTable):
+class SketchMaintainer(_RollupLogic, SwapCommittedTable):
     """Maintains a per-day HLL sketch table from an event stream.
 
     Each micro-batch sketches ONLY its own rows
@@ -142,40 +137,28 @@ class SketchMaintainer(SwapCommittedTable):
     def read_sketches(self, spark: SparkSession) -> DataFrame | None:
         return self.read_table(spark)
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _increment(self, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
         from beast_spark.operators.sketches import sketch_by_slice
 
-        if batch_id in self.applied_batches():
-            return
-        spark = batch_df.sparkSession
         day = F.date_format(self.ts_col, "yyyy-MM-dd").alias("day")
-        inc = sketch_by_slice(batch_df, [day], self.value_col)
-        existing = self.read_table(spark)
-        if existing is None:
-            updated = inc
-        else:
-            updated = (
-                existing.unionByName(inc)
-                .groupBy("day")
-                .agg(
-                    F.hll_union_agg("sketch").alias("sketch"),
-                    F.sum("n_rows").alias("n_rows"),
-                )
-            )
-        self.commit(updated, batch_id)
+        return sketch_by_slice(batch_df, [day], self.value_col)
 
-    def stream_from(self, events: DataFrame, checkpoint: str):
+    def _merge(self, existing: DataFrame, inc: DataFrame) -> DataFrame:
+        from pyspark.sql import functions as F
+
         return (
-            events.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+            existing.unionByName(inc)
+            .groupBy("day")
+            .agg(
+                F.hll_union_agg("sketch").alias("sketch"),
+                F.sum("n_rows").alias("n_rows"),
+            )
         )
 
 
-class CentroidMaintainer(SwapCommittedTable):
+class CentroidMaintainer(_RollupLogic, SwapCommittedTable):
     """Maintains per-label embedding-centroid STATE from a vector stream.
 
     Mergeable state is (label, dim, sum, n) — the q143 discipline on
@@ -192,7 +175,7 @@ class CentroidMaintainer(SwapCommittedTable):
         self.label_col = label_col
         self.vec_col = vec_col
 
-    def _state(self, df: DataFrame) -> DataFrame:
+    def _increment(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
         return (
@@ -218,28 +201,11 @@ class CentroidMaintainer(SwapCommittedTable):
             "label", "dim", (F.col("s") / F.col("n")).alias("centroid_val")
         )
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _merge(self, existing: DataFrame, inc: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
-        if batch_id in self.applied_batches():
-            return
-        spark = batch_df.sparkSession
-        inc = self._state(batch_df)
-        existing = self.read_table(spark)
-        if existing is None:
-            updated = inc
-        else:
-            updated = (
-                existing.unionByName(inc)
-                .groupBy("label", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            )
-        self.commit(updated, batch_id)
-
-    def stream_from(self, vectors: DataFrame, checkpoint: str):
         return (
-            vectors.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+            existing.unionByName(inc)
+            .groupBy("label", "dim")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         )

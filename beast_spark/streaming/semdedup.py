@@ -72,12 +72,16 @@ from beast_spark.operators.similarity import (
     ivf_probes,
 )
 from beast_spark.queries._util import rnd
-from beast_spark.streaming.swap import ManifestSwapTable, artifact_fingerprint
+from beast_spark.streaming.swap import (
+    Maintainer,
+    ManifestSwapTable,
+    artifact_fingerprint,
+)
 
 __all__ = ["SemanticDedupMaintainer", "MultiProbeSemanticDedupMaintainer"]
 
 
-class SemanticDedupMaintainer(ManifestSwapTable):
+class SemanticDedupMaintainer(Maintainer, ManifestSwapTable):
     """Owns one manifest-committed state directory
     (members + dropped + occupancy + capped)."""
 
@@ -231,9 +235,7 @@ class SemanticDedupMaintainer(ManifestSwapTable):
 
     # -- the foreachBatch body --------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover()
         self._check_marker()
         spark = batch_df.sparkSession
@@ -768,17 +770,6 @@ class SemanticDedupMaintainer(ManifestSwapTable):
             },
         )
 
-    # -- wiring ----------------------------------------------------------
-
-    def stream_from(self, vectors: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            vectors.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
 
 class MultiProbeSemanticDedupMaintainer(SemanticDedupMaintainer):
     """The streamed twin of ``semantic_dedup_multiprobe``: every vector
@@ -1011,9 +1002,7 @@ class MultiProbeSemanticDedupMaintainer(SemanticDedupMaintainer):
             mem = mem.join(F.broadcast(resent_ids), self.id_col, "left_anti")
         return mem
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover()
         self._check_marker()
         spark = batch_df.sparkSession

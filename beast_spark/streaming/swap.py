@@ -1,5 +1,6 @@
-"""Swap-committed table directories: the commit protocol shared by the
-streaming maintenance jobs (SCD2 dimensions, aggregate rollups).
+"""The streaming maintainers' shared lifecycle (:class:`Maintainer`) and
+the commit protocols behind it: swap-committed table directories and
+the fragment manifest (:class:`ManifestSwapTable`).
 
 The reference achieves effectively-once warehouse writes with per-row
 insert ids (``BQRowWithInsertId.java:9-12``); maintenance jobs that
@@ -109,6 +110,42 @@ def check_json_meta(meta_file: str, meta: dict, what: str, hint: str) -> None:
         )
 
 
+class Maintainer:
+    """The one lifecycle every streaming maintainer shares: a batch
+    counts once, and only after its write lands.
+
+    :meth:`apply_batch` is the ``foreachBatch`` body. It skips a batch
+    id the committed ledger already holds (a replay after a post-commit
+    crash) and hands any other batch to the subclass hook
+    :meth:`_absorb`, which computes the batch's effect and commits it
+    together with ``batch_id`` in one atomic step. :meth:`stream_from`
+    drives it as an availableNow stream whose checkpoint re-delivers
+    exactly the batches not yet committed — Structured Streaming's
+    ``foreachBatch`` + checkpoint contract, encoded once.
+
+    The mixin holds no storage: the host's commit backend
+    (:class:`SwapCommittedTable`, :class:`ManifestSwapTable` or
+    ``sources/versioned.py::VersionedTable``) provides
+    ``applied_batches()``, and ``_absorb`` commits through it."""
+
+    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in self.applied_batches():
+            return  # replay after a post-commit crash: already applied
+        self._absorb(batch_df, batch_id)
+
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
+        raise NotImplementedError
+
+    def stream_from(self, rows: DataFrame, checkpoint: str):
+        """Start the maintenance stream (availableNow-compatible)."""
+        return (
+            rows.writeStream.foreachBatch(self.apply_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+
 class SwapCommittedTable:
     """Owns one locally materialized table directory committed by swap."""
 
@@ -190,14 +227,14 @@ class SwapCommittedTable:
         self._swap_in(tmp)
 
 
-class AdditiveStatsMaintainer(SwapCommittedTable):
-    """Shared choreography for SMALL additive-counts maintainers (gate
-    accounting, token accounting): replay no-op, crash recovery BEFORE
-    the marker guard, marker-before-first-commit, per-batch counts
-    merged additively, marker-guarded reads. Factoring this once is
-    what keeps the subtle orderings from drifting between copies — a
-    review found the recover-after-guard read bug had already
-    propagated by copy-paste.
+class AdditiveStatsMaintainer(Maintainer, SwapCommittedTable):
+    """Shared choreography for SMALL additive-counts maintainers (gate,
+    token and importance accounting, drift histograms): replay no-op,
+    crash recovery BEFORE the marker guard, marker-before-first-commit,
+    per-batch counts merged additively, marker-guarded reads. Factoring
+    this once is what keeps the subtle orderings from drifting between
+    copies — a review found the recover-after-guard read bug had
+    already propagated by copy-paste.
 
     Subclasses provide :meth:`_meta` (the frozen-config marker),
     :meth:`_batch_counts` (this batch's contribution — must share its
@@ -232,9 +269,7 @@ class AdditiveStatsMaintainer(SwapCommittedTable):
             self._guard_hint(),
         )
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches():
-            return  # replay after a post-commit crash: already applied
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         self._recover()
         meta = self._meta()
         if os.path.exists(self.path):
@@ -264,15 +299,6 @@ class AdditiveStatsMaintainer(SwapCommittedTable):
         if counts is None:
             raise ValueError(self._empty_msg())
         return counts
-
-    def stream_from(self, rows: DataFrame, checkpoint: str):
-        """Start the maintenance stream (availableNow-compatible)."""
-        return (
-            rows.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
 
 _MANIFEST = "MANIFEST.json"
