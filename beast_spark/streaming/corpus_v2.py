@@ -9,10 +9,10 @@ document arrives, which can disqualify a document accepted batches ago.
 No append-mode streaming operator can un-emit a row, so v2 is a
 ``foreachBatch`` incremental maintainer on the shared lifecycle
 (``streaming/swap.py::Maintainer``) — cross-batch semantic state lives
-in one swap-committed directory (exactly-once via the shared ledger
-protocol of ``streaming/swap.py``; the stream itself carries no engine
-state),
-holding three sub-tables:
+in one manifest-committed directory (exactly-once via the shared
+manifest flip of ``streaming/swap.py::ManifestSwapTable``, the single
+commit point; the stream itself carries no engine state), holding
+three sub-tables:
 
 * ``signals``  — one slim row per document ever seen: gate signals +
   the boilerplate counters (n_chunks, n_boiler) that later batches may
@@ -57,13 +57,14 @@ from beast_spark.operators.quality import (
     repetition_signals,
 )
 from beast_spark.queries._util import rnd
-from beast_spark.streaming.swap import Maintainer, SwapCommittedTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = ["CorpusV2Maintainer"]
 
 
-class CorpusV2Maintainer(Maintainer, SwapCommittedTable):
-    """Owns one swap-committed state directory (signals/chunks/postings)."""
+class CorpusV2Maintainer(Maintainer, ManifestSwapTable):
+    """Owns one manifest-committed state directory
+    (signals/chunks/postings)."""
 
     def __init__(
         self,
@@ -72,7 +73,7 @@ class CorpusV2Maintainer(Maintainer, SwapCommittedTable):
         max_dup_trigram_frac: float = 0.2,
         max_boiler_frac: float = 0.5,
     ) -> None:
-        SwapCommittedTable.__init__(self, path)
+        ManifestSwapTable.__init__(self, path)
         self.min_norm_entropy = min_norm_entropy
         self.max_dup_trigram_frac = max_dup_trigram_frac
         self.max_boiler_frac = max_boiler_frac
@@ -195,9 +196,9 @@ class CorpusV2Maintainer(Maintainer, SwapCommittedTable):
             signals = repaired.unionByName(sig_new)
             postings = old_postings.unionByName(post_new)
 
-        self.commit_frames(
-            {"signals": signals, "chunks": merged_counts, "postings": postings},
+        self.commit_delta(
             batch_id,
+            full={"signals": signals, "chunks": merged_counts, "postings": postings},
         )
 
 

@@ -7,14 +7,15 @@ contaminates every training document it shares an 8-token gram with.
 The batch form (q109 / ``operators/decontam.py::decontam_stats``)
 recomputes the full overlap; this maintainer is the continuous form,
 the shared ``foreachBatch`` lifecycle (``streaming/swap.py::Maintainer``)
-applied to q109's semantics. State (one swap-committed dir, all
-sub-tables + ledger flip in a single atomic rename):
+applied to q109's semantics. State (one manifest-committed dir, all
+sub-tables + ledger flip in a single atomic manifest rename — the one
+commit point, ``streaming/swap.py::ManifestSwapTable``):
 
 * ``train_postings`` — distinct (g, doc_id) grams of the FROZEN
   training corpus, derived once from ``train_path`` before the first
   commit and stored in an IMMUTABLE sibling dir (``<path>.train_
   postings``, created via tmp+rename) — it never changes, so it stays
-  outside the per-batch swap and is never rewritten (at warehouse
+  outside the per-batch commit and is never rewritten (at warehouse
   scale write it bucketed by ``g`` so each eval batch's probe prunes
   to the touched buckets);
 * ``eval_grams``   — (g) distinct eval grams seen so far;
@@ -24,11 +25,10 @@ sub-tables + ledger flip in a single atomic rename):
 
 Both metrics accumulate ADDITIVELY under an append-only eval stream, so
 the PROBE each trigger runs is O(batch + matched postings) — one
-broadcast of the batch's grams onto one postings scan. The COMMIT, like
-every swap-committed maintainer here, rewrites the cumulative state
-tables (eval-gram-, eval-id-, and contaminated-doc-sized — aggregate
-tables, orders of magnitude smaller than the corpus but growing with
-the eval set); at warehouse scale partition ``contam`` and merge only
+broadcast of the batch's grams onto one postings scan. The COMMIT
+replaces the cumulative state tables in full (eval-gram-, eval-id-,
+and contaminated-doc-sized — aggregate tables, orders of magnitude
+smaller than the corpus but growing with the eval set); at warehouse scale partition ``contam`` and merge only
 touched partitions. The additivity argument:
 
 * a NEW eval doc contributes at most 1 to a train doc's
@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from beast_spark.operators.decontam import doc_gram_postings
 from beast_spark.streaming.swap import (
     Maintainer,
-    SwapCommittedTable,
+    ManifestSwapTable,
     artifact_fingerprint,
     check_json_meta,
     write_json_meta,
@@ -65,14 +65,15 @@ from beast_spark.streaming.swap import (
 __all__ = ["DecontamMaintainer"]
 
 
-class DecontamMaintainer(Maintainer, SwapCommittedTable):
-    """Owns one swap-committed state directory
-    (train_postings/eval_grams/eval_docs/contam)."""
+class DecontamMaintainer(Maintainer, ManifestSwapTable):
+    """Owns one manifest-committed state directory
+    (eval_grams/eval_docs/contam) and its immutable train-postings
+    sibling."""
 
     def __init__(
         self, path: str, train_path: str, n: int = 8, fingerprint=None
     ) -> None:
-        SwapCommittedTable.__init__(self, path)
+        ManifestSwapTable.__init__(self, path)
         self.train_path = train_path
         self.n = n
         # storage-native fingerprint hook: the default walks local files
@@ -217,13 +218,13 @@ class DecontamMaintainer(Maintainer, SwapCommittedTable):
             else eval_docs.unionByName(ids_new.distinct())
         )
         try:
-            self.commit_frames(
-                {
+            self.commit_delta(
+                batch_id,
+                full={
                     "eval_grams": new_eval_grams,
                     "eval_docs": new_eval_docs,
                     "contam": merged,
                 },
-                batch_id,
             )
         finally:
             flagged.unpersist()

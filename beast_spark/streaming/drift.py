@@ -13,17 +13,18 @@ derived from histogram + baseline on read. streamed(prefix) ==
 batch PSI(baseline, prefix) exactly — the per-prefix equivalence the
 tests pin.
 
-State: one swap-committed ``counts`` sub-table ((key, bucket, n) —
+State: one manifest-committed ``counts`` sub-table ((key, bucket, n) —
 keys × buckets rows, independent of event volume). The baseline is
-validated by the shared frozen-artifact marker
-(``streaming/swap.py::check_json_meta``): a baseline rewritten in
-place, or a maintainer constructed with different bucketing, raises
-instead of silently reporting drift against the wrong reference.
+validated by the frozen-artifact marker that rides in the same
+manifest flip as the counts (``streaming/swap.py::
+AdditiveStatsMaintainer``): a baseline rewritten in place, or a
+maintainer constructed with different bucketing, raises instead of
+silently reporting drift against the wrong reference.
 
 Unlike the keyed maintainers (near-dup, IVF) there is no duplicate-id
 guard: events are observations, not keyed entities — exactly-once per
-BATCH is the contract, and the swap ledger provides it (replay no-op
-tested).
+BATCH is the contract, and the manifest's batch ledger provides it
+(replay no-op tested).
 
 PSI semantics match q104 bit-for-bit: fixed-width value buckets
 (top-clamped), Laplace smoothing +0.5 per present bucket with
@@ -198,9 +199,9 @@ def exact_ks(
 
 
 class DriftMaintainer(AdditiveStatsMaintainer):
-    """Owns one swap-committed state directory (counts). Choreography
-    (replay no-op, recovery-before-guard, marker-before-first-commit,
-    guarded reads) comes from the shared
+    """Owns one manifest-committed state directory (counts).
+    Choreography (replay no-op, marker flipped with the counts, guarded
+    reads) comes from the shared
     ``streaming/swap.py::AdditiveStatsMaintainer`` base."""
 
     def __init__(

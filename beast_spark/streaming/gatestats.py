@@ -12,12 +12,12 @@ single-row state. streamed(prefix) == batch q180(prefix) exactly —
 the per-prefix equivalence the tests pin; the registered q189 shares
 q180's oracle VERBATIM.
 
-Choreography (replay no-op, recovery-before-guard, marker-before-first-
-commit, guarded reads) comes from the shared
-``streaming/swap.py::AdditiveStatsMaintainer`` base. Same contract
-family as ``streaming/drift.py``: documents are observations (no
-duplicate-id guard — exactly-once per BATCH via the swap ledger); gate
-thresholds are part of the state's meta marker, so a maintainer
+Choreography (replay no-op, marker flipped with the counts, guarded
+reads) comes from the shared ``streaming/swap.py::AdditiveStatsMaintainer``
+base. Same contract family as ``streaming/drift.py``: documents are
+observations (no duplicate-id guard — exactly-once per BATCH via the
+manifest's batch ledger); gate thresholds are part of the state's
+marker, so a maintainer
 constructed with different rules over existing counts raises instead
 of mixing accounting regimes.
 """
@@ -38,7 +38,8 @@ __all__ = ["GateStatsMaintainer"]
 
 
 class GateStatsMaintainer(AdditiveStatsMaintainer):
-    """Owns one swap-committed state directory (counts — a single row)."""
+    """Owns one manifest-committed state directory (counts — a single
+    row)."""
 
     def __init__(self, path: str, **gate_kwargs) -> None:
         AdditiveStatsMaintainer.__init__(self, path)
@@ -77,6 +78,5 @@ class GateStatsMaintainer(AdditiveStatsMaintainer):
     def read_stats(self, spark: SparkSession) -> DataFrame:
         """q180's single accounting row (rejections per rule, retention)
         over everything ingested so far — marker-validated via the
-        shared guarded read, recovery FIRST (a mid-swap crash must not
-        skip the guard and serve counts unvalidated)."""
+        shared guarded read."""
         return gate_stats_row(self._read_counts_guarded(spark))

@@ -15,8 +15,8 @@ the maintained model is a broadcast map-side pass
 streamed-model(prefix) == batch-model(prefix) exactly — integer count
 sums — so a selection served from the maintained model matches the
 batch q219 bit-for-bit; the registered q222 shares q219's oracle
-VERBATIM. Choreography (replay no-op, recovery-before-guard,
-marker-before-first-commit, guarded reads) comes from the shared
+VERBATIM. Choreography (replay no-op, marker flipped with the counts in
+one manifest commit, guarded reads) comes from the shared
 ``streaming/swap.py::AdditiveStatsMaintainer`` base. The marker freezes
 (predicate, n_buckets, hash_family): counts accumulated under one
 featurization are meaningless under another, so a reopened maintainer
@@ -40,7 +40,7 @@ __all__ = ["ImportanceModelMaintainer"]
 
 
 class ImportanceModelMaintainer(AdditiveStatsMaintainer):
-    """Owns one swap-committed state directory (counts — one row per
+    """Owns one manifest-committed state directory (counts — one row per
     hash bucket: raw_c, tgt_c)."""
 
     def __init__(

@@ -134,7 +134,6 @@ class LexicalIndexMaintainer(Maintainer, ManifestSwapTable):
     # -- the foreachBatch body --------------------------------------------
 
     def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._recover()
         self._check_marker()
         spark = batch_df.sparkSession
         raw_post = self._read_sub(spark, "postings")
@@ -283,7 +282,6 @@ class LexicalIndexMaintainer(Maintainer, ManifestSwapTable):
         driver action (≤ n_shards scalars). ``as_of_gen`` serves a
         retained earlier generation's snapshot, filtered with the
         watermarks that generation saw."""
-        self._recover()
         self._check_marker()
         consts = self.read_consts(spark, as_of_gen=as_of_gen)
         if consts is None:

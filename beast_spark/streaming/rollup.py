@@ -16,9 +16,11 @@ out-of-order batches, backfills, and late data all converge to exactly
 the full-rebuild table (property-tested batch-side in
 ``tests/test_operators.py``).
 
-Exactly-once commit is the shared swap-ledger protocol
-(``streaming/swap.py``). Rewriting the full rollup per batch is the
-local-parquet simplification — the rollup is aggregate-sized, orders of
+Exactly-once commit is the shared manifest protocol
+(``streaming/swap.py::ManifestSwapTable``): the merged rollup and the
+batch id land in one atomic manifest flip, the single commit point.
+Committing the full rollup per batch is the local-parquet
+simplification — the rollup is aggregate-sized, orders of
 magnitude smaller than its input; at warehouse scale the same merge
 feeds a keyed MERGE (streaming/sink.py staged keyed publish) on the
 (day, keys) primary key.
@@ -31,38 +33,33 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from beast_spark.operators.rollup import daily_rollup, merge_rollups
-from beast_spark.sources.versioned import VersionedTable
-from beast_spark.streaming.swap import Maintainer, SwapCommittedTable
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 __all__ = [
     "CentroidMaintainer",
     "RollupMaintainer",
     "SketchMaintainer",
-    "VersionedRollupMaintainer",
 ]
 
 
-class _RollupLogic(Maintainer):
-    """The maintenance algebra, independent of the commit backend: per
+class _RollupLogic(Maintainer, ManifestSwapTable):
+    """The maintenance algebra shared by the three maintainers here: per
     batch, build the increment, read the stored table, merge (or take
-    the increment before the first commit) and commit. The default
-    hooks are the daily rollup's; :class:`SketchMaintainer` and
-    :class:`CentroidMaintainer` supply their own ``_increment`` /
-    ``_merge``. Every merge here is commutative and associative, so any
-    batch order converges — the merge is order-insensitive.
-
-    Host classes provide the storage protocol — ``applied_batches()``,
-    ``read_table(spark)`` (None before first commit), and
-    ``commit(df, batch_id)`` — which both ``SwapCommittedTable`` and
-    ``sources/versioned.py::VersionedTable`` implement.
+    the increment before the first commit) and commit it as the one
+    ``table`` sub-table. The default hooks are the daily rollup's;
+    :class:`SketchMaintainer` and :class:`CentroidMaintainer` supply
+    their own ``_increment`` / ``_merge``. Every merge here is
+    commutative and associative, so any batch order converges — the
+    merge is order-insensitive.
     """
 
+    _SUB = "table"
     key_cols: list
     ts_col: str
     value_col: str
 
     def read_rollup(self, spark: SparkSession) -> DataFrame | None:
-        return self.read_table(spark)
+        return self._read_sub(spark, self._SUB)
 
     def _increment(self, batch_df: DataFrame) -> DataFrame:
         return daily_rollup(batch_df, self.key_cols, self.ts_col, self.value_col)
@@ -72,12 +69,12 @@ class _RollupLogic(Maintainer):
 
     def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
         inc = self._increment(batch_df)
-        existing = self.read_table(batch_df.sparkSession)
+        existing = self._read_sub(batch_df.sparkSession, self._SUB)
         updated = inc if existing is None else self._merge(existing, inc)
-        self.commit(updated, batch_id)
+        self.commit_delta(batch_id, full={self._SUB: updated})
 
 
-class RollupMaintainer(_RollupLogic, SwapCommittedTable):
+class RollupMaintainer(_RollupLogic):
     """Owns one materialized rollup directory fed by an event stream."""
 
     def __init__(
@@ -87,34 +84,13 @@ class RollupMaintainer(_RollupLogic, SwapCommittedTable):
         ts_col: str,
         value_col: str,
     ) -> None:
-        SwapCommittedTable.__init__(self, rollup_path)
+        ManifestSwapTable.__init__(self, rollup_path)
         self.key_cols = list(key_cols)
         self.ts_col = ts_col
         self.value_col = value_col
 
 
-class VersionedRollupMaintainer(_RollupLogic, VersionedTable):
-    """Rollup maintenance committing into a versioned table: every
-    micro-batch becomes a retained, queryable SNAPSHOT (time travel to
-    the rollup as-of any batch), the batch ledger rides in the same
-    atomic manifest flip as the version pointer, and old snapshots age
-    out via ``vacuum()``."""
-
-    def __init__(
-        self,
-        rollup_path: str,
-        key_cols: Sequence[str],
-        ts_col: str,
-        value_col: str,
-        keep_versions: int = 3,
-    ) -> None:
-        VersionedTable.__init__(self, rollup_path, keep_versions=keep_versions)
-        self.key_cols = list(key_cols)
-        self.ts_col = ts_col
-        self.value_col = value_col
-
-
-class SketchMaintainer(_RollupLogic, SwapCommittedTable):
+class SketchMaintainer(_RollupLogic):
     """Maintains a per-day HLL sketch table from an event stream.
 
     Each micro-batch sketches ONLY its own rows
@@ -135,7 +111,7 @@ class SketchMaintainer(_RollupLogic, SwapCommittedTable):
         self.value_col = value_col
 
     def read_sketches(self, spark: SparkSession) -> DataFrame | None:
-        return self.read_table(spark)
+        return self._read_sub(spark, self._SUB)
 
     def _increment(self, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
@@ -158,7 +134,7 @@ class SketchMaintainer(_RollupLogic, SwapCommittedTable):
         )
 
 
-class CentroidMaintainer(_RollupLogic, SwapCommittedTable):
+class CentroidMaintainer(_RollupLogic):
     """Maintains per-label embedding-centroid STATE from a vector stream.
 
     Mergeable state is (label, dim, sum, n) — the q143 discipline on
@@ -167,7 +143,7 @@ class CentroidMaintainer(_RollupLogic, SwapCommittedTable):
     state by summation; centroids (and the q138 drift cosines) derive
     at read time, so the maintained table equals a from-scratch build
     exactly (integer counts, sum merge order invisible at read
-    rounding). Commit protocol: shared swap ledger.
+    rounding). Commit protocol: the shared manifest flip.
     """
 
     def __init__(self, state_path: str, label_col: str, vec_col: str) -> None:
@@ -194,7 +170,7 @@ class CentroidMaintainer(_RollupLogic, SwapCommittedTable):
         """(label, dim, centroid_val) derived from the maintained sums."""
         from pyspark.sql import functions as F
 
-        state = self.read_table(spark)
+        state = self._read_sub(spark, self._SUB)
         if state is None:
             return None
         return state.select(

@@ -188,7 +188,6 @@ class SemanticDedupMaintainer(Maintainer, ManifestSwapTable):
     ) -> DataFrame:
         """(id, cid, replaced_by, cos_sim) — the live action table
         (empty-but-typed before any drop is found)."""
-        self._recover()
         self._check_marker()
         d = self._read_sub(spark, "dropped", as_of_gen=as_of_gen)
         if d is not None:
@@ -236,7 +235,6 @@ class SemanticDedupMaintainer(Maintainer, ManifestSwapTable):
     # -- the foreachBatch body --------------------------------------------
 
     def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._recover()
         self._check_marker()
         spark = batch_df.sparkSession
         centroids = spark.read.parquet(self.centroids_path)
@@ -867,7 +865,6 @@ class MultiProbeSemanticDedupMaintainer(SemanticDedupMaintainer):
     ) -> DataFrame:
         """(id, replaced_by, cos_sim) — the q228 action schema (no cell
         column), empty-but-typed before any drop is found."""
-        self._recover()
         self._check_marker()
         d = self._read_sub(spark, "dropped", as_of_gen=as_of_gen)
         if d is not None:
@@ -1003,7 +1000,6 @@ class MultiProbeSemanticDedupMaintainer(SemanticDedupMaintainer):
         return mem
 
     def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._recover()
         self._check_marker()
         spark = batch_df.sparkSession
         centroids = spark.read.parquet(self.centroids_path)

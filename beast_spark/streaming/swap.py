@@ -1,21 +1,20 @@
 """The streaming maintainers' shared lifecycle (:class:`Maintainer`) and
-the commit protocols behind it: swap-committed table directories and
-the fragment manifest (:class:`ManifestSwapTable`).
+the one commit protocol behind it: the fragment manifest
+(:class:`ManifestSwapTable`).
 
 The reference achieves effectively-once warehouse writes with per-row
 insert ids (``BQRowWithInsertId.java:9-12``); maintenance jobs that
 REWRITE a derived table need a whole-table analogue. Protocol:
 
-* the applied-batch ledger is written INSIDE the new table directory
-  BEFORE the swap, so the swap (a rename) is the single commit point —
-  a replayed batch after any crash either sees the old directory
-  (ledger lacks the batch → re-apply) or the new one (ledger has it →
-  skip). There is no window where a batch is half-applied, because
-  nothing mutates the live directory in place.
-* the two-rename swap has the same brief-absence window as partition
-  compaction and reuses the same ``.replaced`` recovery rule
-  (``streaming/maintenance.py``): live dir missing + ``.replaced``
-  present → restore on next access.
+* a batch's new data is written as fresh fragment directories that no
+  reader can see yet;
+* the applied-batch ledger (and any frozen-config marker) lives INSIDE
+  ``MANIFEST.json``, next to the fragment map, so the atomic rename of
+  the new manifest over the old one is the single commit point — a
+  replayed batch after any crash either sees the old manifest (ledger
+  lacks the batch → re-apply) or the new one (ledger has it → skip).
+  There is no window where a batch is half-applied or the state is
+  absent, because nothing mutates a live fragment in place.
 """
 
 from __future__ import annotations
@@ -29,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 _LEDGER = "_applied_batches.json"
 
 __all__ = [
-    "SwapCommittedTable",
     "AdditiveStatsMaintainer",
     "ManifestSwapTable",
     "artifact_fingerprint",
@@ -77,8 +75,6 @@ def artifact_fingerprint(path: str) -> str:
 def write_json_meta(meta_file: str, meta: dict) -> None:
     """Write the frozen-artifact marker a maintainer validates against
     (see :func:`check_json_meta`)."""
-    import json
-
     with open(meta_file, "w") as fh:
         json.dump(meta, fh)
 
@@ -95,14 +91,17 @@ def check_json_meta(meta_file: str, meta: dict, what: str, hint: str) -> None:
     the stored side already went through one, and without it a
     tuple-valued config (JSON reads back as a list) would spuriously
     reject every batch after the first."""
-    import json
-
-    meta = json.loads(json.dumps(meta))
+    stored = None
     if os.path.exists(meta_file):
         with open(meta_file) as fh:
             stored = json.load(fh)
-    else:
-        stored = None
+    _check_meta(stored, meta, what, hint)
+
+
+def _check_meta(stored: dict | None, meta: dict, what: str, hint: str) -> None:
+    """The comparison behind :func:`check_json_meta`, for a marker
+    already loaded (e.g. a manifest's ``user_meta``)."""
+    meta = json.loads(json.dumps(meta))
     if stored != meta:
         raise ValueError(
             f"{what}: existing state was built with {stored}, this "
@@ -123,10 +122,11 @@ class Maintainer:
     exactly the batches not yet committed — Structured Streaming's
     ``foreachBatch`` + checkpoint contract, encoded once.
 
-    The mixin holds no storage: the host's commit backend
-    (:class:`SwapCommittedTable`, :class:`ManifestSwapTable` or
-    ``sources/versioned.py::VersionedTable``) provides
-    ``applied_batches()``, and ``_absorb`` commits through it."""
+    The mixin holds no storage: every host is also a
+    :class:`ManifestSwapTable`, whose manifest provides
+    ``applied_batches()`` and whose :meth:`ManifestSwapTable.commit_delta`
+    is the one commit ``_absorb`` goes through — the manifest flip is
+    the single commit point for every maintainer."""
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.applied_batches():
@@ -146,183 +146,26 @@ class Maintainer:
         )
 
 
-class SwapCommittedTable:
-    """Owns one locally materialized table directory committed by swap."""
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-    # -- recovery ---------------------------------------------------------
-
-    def _recover(self) -> None:
-        """Heal a crash inside the two-rename swap: live dir missing but
-        ``.replaced`` present → restore it."""
-        replaced = self.path + ".replaced"
-        if not os.path.exists(self.path) and os.path.exists(replaced):
-            os.rename(replaced, self.path)
-
-    def applied_batches(self) -> set[int]:
-        self._recover()
-        ledger = os.path.join(self.path, _LEDGER)
-        if not os.path.exists(ledger):
-            return set()
-        with open(ledger) as fh:
-            return set(json.load(fh))
-
-    def read_table(self, spark: SparkSession) -> DataFrame | None:
-        self._recover()
-        if not os.path.exists(self.path):
-            return None
-        return spark.read.parquet(self.path)
-
-    def _read_sub(self, spark: SparkSession, name: str) -> DataFrame | None:
-        """Read one sub-table of a multi-table state dir (None before
-        the first commit) — shared by every commit_frames maintainer."""
-        self._recover()
-        sub = os.path.join(self.path, name)
-        if not os.path.exists(sub):
-            return None
-        return spark.read.parquet(sub)
-
-    # -- commit -----------------------------------------------------------
-
-    def _swap_in(self, tmp: str) -> None:
-        replaced = self.path + ".replaced"
-        if os.path.exists(replaced):
-            shutil.rmtree(replaced)
-        if os.path.exists(self.path):
-            os.rename(self.path, replaced)
-        os.rename(tmp, self.path)  # <- the commit point
-        if os.path.exists(replaced):
-            shutil.rmtree(replaced)
-
-    def commit(self, updated: DataFrame, batch_id: int) -> None:
-        """Materialize ``updated`` with ``batch_id`` recorded in its
-        ledger, then swap it live atomically."""
-        tmp = self.path + ".applying"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        updated.write.parquet(tmp)
-        with open(os.path.join(tmp, _LEDGER), "w") as fh:
-            json.dump(sorted(self.applied_batches() | {batch_id}), fh)
-        self._swap_in(tmp)
-
-    def commit_frames(self, frames: dict[str, DataFrame], batch_id: int) -> None:
-        """Multi-sub-table form of :meth:`commit`: write every frame as a
-        sub-directory under one tmp dir, record ``batch_id`` in the
-        ledger, then the single swap rename commits all of them together
-        — the protocol every multi-table maintainer with SMALL state
-        (drift histograms, gate counters, decontam markers) shares.
-        Index-bearing maintainers whose state grows with the corpus
-        (IVF/near-dup/corpus-v3) use :class:`ManifestSwapTable` instead:
-        this method rewrites every frame in full each commit, which is
-        write amplification proportional to state size."""
-        tmp = self.path + ".applying"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        for name, df in frames.items():
-            df.write.parquet(os.path.join(tmp, name))
-        with open(os.path.join(tmp, _LEDGER), "w") as fh:
-            json.dump(sorted(self.applied_batches() | {batch_id}), fh)
-        self._swap_in(tmp)
-
-
-class AdditiveStatsMaintainer(Maintainer, SwapCommittedTable):
-    """Shared choreography for SMALL additive-counts maintainers (gate,
-    token and importance accounting, drift histograms): replay no-op,
-    crash recovery BEFORE the marker guard, marker-before-first-commit,
-    per-batch counts merged additively, marker-guarded reads. Factoring
-    this once is what keeps the subtle orderings from drifting between
-    copies — a review found the recover-after-guard read bug had
-    already propagated by copy-paste.
-
-    Subclasses provide :meth:`_meta` (the frozen-config marker),
-    :meth:`_batch_counts` (this batch's contribution — must share its
-    builder with the batch query so twin and query cannot drift),
-    :meth:`_merge` (additive combine), and the guard message hooks."""
-
-    _SUB = "counts"
-
-    def _meta(self) -> dict:
-        raise NotImplementedError
-
-    def _batch_counts(self, spark: SparkSession, batch_df: DataFrame) -> DataFrame:
-        raise NotImplementedError
-
-    def _merge(self, counts: DataFrame, inc: DataFrame) -> DataFrame:
-        raise NotImplementedError
-
-    def _guard_what(self) -> str:
-        return f"{type(self).__name__} (state at {self.path})"
-
-    def _guard_hint(self) -> str:
-        raise NotImplementedError
-
-    def _empty_msg(self) -> str:
-        return f"{type(self).__name__}: nothing ingested yet"
-
-    def _guard(self) -> None:
-        check_json_meta(
-            self.path + ".meta.json",
-            self._meta(),
-            self._guard_what(),
-            self._guard_hint(),
-        )
-
-    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._recover()
-        meta = self._meta()
-        if os.path.exists(self.path):
-            self._guard()
-        spark = batch_df.sparkSession
-        inc = self._batch_counts(spark, batch_df)
-        counts = self._read_sub(spark, self._SUB)
-        merged = inc if counts is None else self._merge(counts, inc)
-        if not os.path.exists(self.path):
-            # marker BEFORE the first commit: a crash in between leaves
-            # marker-without-state (overwritten next attempt), never
-            # state-without-marker
-            write_json_meta(self.path + ".meta.json", meta)
-        self.commit_frames({self._SUB: merged}, batch_id)
-
-    def _read_counts_guarded(self, spark: SparkSession) -> DataFrame:
-        """The marker-validated counts read every derived view starts
-        from. Recovery runs FIRST: a crash between the swap's two
-        renames leaves the live dir missing, and an exists()-gated
-        guard would be skipped while ``_read_sub``'s internal recovery
-        then served the counts UNVALIDATED — a reader holding changed
-        frozen config would silently mix regimes."""
-        self._recover()
-        if os.path.exists(self.path):
-            self._guard()
-        counts = self._read_sub(spark, self._SUB)
-        if counts is None:
-            raise ValueError(self._empty_msg())
-        return counts
-
-
 _MANIFEST = "MANIFEST.json"
 _SHARD = "_shard"
 
 
 class ManifestSwapTable:
     """Multi-sub-table state directory committed by a single atomic
-    MANIFEST flip — per-batch write cost proportional to the DELTA, not
-    the cumulative state.
+    MANIFEST flip — the one commit protocol of every streaming
+    maintainer, with per-batch write cost proportional to the DELTA for
+    the sub-tables that commit one.
 
-    :class:`SwapCommittedTable.commit_frames` rewrites every sub-table
-    in full per commit: exactly-once and crash-safe, but each
-    micro-batch of an index-bearing maintainer (IVF postings, LSH
-    postings, corpus signals) would rewrite the whole index — write
-    amplification proportional to corpus size, the one O(N)-per-trigger
-    cost a streaming index cannot afford at warehouse scale. This class
-    keeps each sub-table as a set of immutable FRAGMENT directories and
-    commits by atomically renaming a new ``MANIFEST.json`` over the old
-    one (POSIX rename of a file is atomic). The manifest is the single
+    Each sub-table is a set of immutable FRAGMENT directories, and a
+    commit atomically renames a new ``MANIFEST.json`` over the old one
+    (POSIX rename of a file is atomic). The manifest is the single
     source of truth: it lists every live fragment leaf per sub-table
-    and holds the applied-batch ledger, so data + ledger still flip in
-    one commit point and a replayed batch after any crash is a no-op —
-    the same contract as the whole-directory swap, at O(delta) writes.
+    and holds the applied-batch ledger, so data + ledger flip in one
+    commit point and a replayed batch after any crash is a no-op.
+    Small aggregate-sized state (rollups, additive counts) simply
+    commits a ``full`` replacement each batch; index-bearing state (IVF
+    postings, LSH postings, corpus signals) appends or replaces shards,
+    so a trigger never rewrites the whole index.
 
     Commit modes per sub-table (mix freely in one commit):
 
@@ -345,8 +188,8 @@ class ManifestSwapTable:
     references — invisible to readers, garbage-collected at the start
     of the next commit. A crash after the flip leaves superseded leaves
     unreferenced — same GC. There is no window where a reader sees a
-    half-applied batch, and no ``.replaced`` dance: the live manifest
-    file always exists once the first commit lands.
+    half-applied batch, and the live manifest file always exists once
+    the first commit lands.
 
     Fragment-count growth (one per batch for append subs) is the
     standard log-structured trade; :meth:`compact` folds a sub-table
@@ -427,11 +270,24 @@ class ManifestSwapTable:
                     "rebuild the state."
                 )
             return m
-        if os.path.exists(os.path.join(self.path, _LEDGER)):
+        # the old whole-directory swap left a top-level ledger, or after a
+        # crash mid-swap only a .replaced/.applying sibling: opening that
+        # as empty state would lose every batch the checkpoint already
+        # committed, so it must be rebuilt instead
+        legacy = [
+            p
+            for p in (
+                os.path.join(self.path, _LEDGER),
+                self.path + ".replaced",
+                self.path + ".applying",
+            )
+            if os.path.exists(p)
+        ]
+        if legacy:
             raise ValueError(
                 f"ManifestSwapTable: state at {self.path!r} uses the legacy "
-                "whole-directory swap layout (top-level _applied_batches.json, "
-                "no MANIFEST.json) — this maintainer now commits per-fragment "
+                f"whole-directory swap layout ({legacy[0]!r}, no "
+                "MANIFEST.json) — this maintainer now commits per-fragment "
                 "through a manifest. Rebuild the state from the source stream "
                 "(fresh state dir + checkpoint)."
             )
@@ -447,11 +303,6 @@ class ManifestSwapTable:
             "subs": {},
             "n_shards": self.n_shards,
         }
-
-    def _recover(self) -> None:
-        """No dir-rename healing needed: the manifest flip is the only
-        rename and it is atomic. Kept for call-site symmetry with
-        :class:`SwapCommittedTable`."""
 
     def applied_batches(self) -> set[int]:
         m = self._load_manifest()
@@ -1054,3 +905,66 @@ class ManifestSwapTable:
         if r is None or r.count() <= max_resent_rows:
             return False
         return self.compact_resends(spark)
+
+
+class AdditiveStatsMaintainer(Maintainer, ManifestSwapTable):
+    """Shared choreography for SMALL additive-counts maintainers (gate,
+    token and importance accounting, drift histograms): replay no-op,
+    per-batch counts merged additively, marker-guarded absorbs and
+    reads. The frozen-config marker rides in the manifest
+    (``commit_delta(user_meta=...)``), so marker and counts change in
+    the same flip: no state can exist without its marker, and a reader
+    holding changed frozen config cannot be served the counts
+    unvalidated.
+
+    Subclasses provide :meth:`_meta` (the frozen-config marker),
+    :meth:`_batch_counts` (this batch's contribution — must share its
+    builder with the batch query so twin and query cannot drift),
+    :meth:`_merge` (additive combine), and the guard message hooks."""
+
+    _SUB = "counts"
+
+    def _meta(self) -> dict:
+        raise NotImplementedError
+
+    def _batch_counts(self, spark: SparkSession, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _merge(self, counts: DataFrame, inc: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _guard_what(self) -> str:
+        return f"{type(self).__name__} (state at {self.path})"
+
+    def _guard_hint(self) -> str:
+        raise NotImplementedError
+
+    def _empty_msg(self) -> str:
+        return f"{type(self).__name__}: nothing ingested yet"
+
+    def _guard(self, meta: dict) -> None:
+        """Raise unless the committed state (if any) was built under
+        ``meta``."""
+        m = self._load_manifest()
+        if m is not None:
+            _check_meta(
+                m.get("user_meta"), meta, self._guard_what(), self._guard_hint()
+            )
+
+    def _absorb(self, batch_df: DataFrame, batch_id: int) -> None:
+        meta = self._meta()
+        self._guard(meta)
+        spark = batch_df.sparkSession
+        inc = self._batch_counts(spark, batch_df)
+        counts = self._read_sub(spark, self._SUB)
+        merged = inc if counts is None else self._merge(counts, inc)
+        self.commit_delta(batch_id, full={self._SUB: merged}, user_meta=meta)
+
+    def _read_counts_guarded(self, spark: SparkSession) -> DataFrame:
+        """The marker-validated counts read every derived view starts
+        from."""
+        self._guard(self._meta())
+        counts = self._read_sub(spark, self._SUB)
+        if counts is None:
+            raise ValueError(self._empty_msg())
+        return counts

@@ -16,12 +16,11 @@ streamed(prefix) == batch q188(prefix) exactly — the per-prefix
 equivalence the tests pin; the registered q198 shares q188's oracle
 VERBATIM.
 
-Choreography (replay no-op, recovery-before-guard, marker-before-first-
-commit, guarded reads) comes from the shared
-``streaming/swap.py::AdditiveStatsMaintainer`` base — the same base the
-gate-accounting maintainer rides on, so the crash-window orderings live
-in exactly one place. State is O(sources); the whole-table commit is
-the right protocol here, not the fragment manifest.
+Choreography (replay no-op, marker flipped with the counts, guarded
+reads) comes from the shared ``streaming/swap.py::AdditiveStatsMaintainer``
+base — the same base the gate-accounting maintainer rides on. State is
+O(sources), so each batch commits the merged counts as one full
+sub-table through the manifest flip, the single commit point.
 """
 
 from __future__ import annotations
@@ -39,7 +38,7 @@ __all__ = ["TokenAccountingMaintainer"]
 
 
 class TokenAccountingMaintainer(AdditiveStatsMaintainer):
-    """Owns one swap-committed state directory (counts — one row per
+    """Owns one manifest-committed state directory (counts — one row per
     source)."""
 
     def __init__(self, path: str, seg_path: str, fingerprint=None) -> None:

@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("BEAST_TEST_SF_DIR", "/root/testdata/sf0.001")
 # external verify budget (~46-60 min; the r13 driver's capture cut off at
 # ~63%, recording tests_ok:false for a suite that passes), so a plain
 # `pytest tests/` now runs the FAST tier (~9-10 min: every operator /
-# codec / streaming-semantics suite) and DESELECTS the eight heaviest
+# codec / streaming-semantics suite) and DESELECTS the seven heaviest
 # files below (~37 min measured: the oracle-parity sweep — which the
 # external driver re-checks independently anyway — the randomized
 # streaming-curation interplay sweeps, and the whole-registry plan/
@@ -31,7 +31,6 @@ _SLOW_FILES = {
     "test_streaming_curation.py",  # 487 s: randomized resend/cap interplay
     "test_plan_quality.py",        # 384 s: whole-registry plan audit fixture
     "test_streaming_corpus_v3.py", # 199 s
-    "test_manifest_swap.py",       # 174 s
     "test_bucket_cap.py",          # 122 s
     "test_streaming_ivf.py",       # 121 s
     "test_streaming_neardup.py",   # 115 s

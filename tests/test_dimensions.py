@@ -112,45 +112,6 @@ def test_crashed_commit_leaves_state_intact(spark, tmp_path):
     assert hist.count() == len(rows0) + 1  # key 1 gained a new interval
 
 
-def test_versioned_scd2_maintainer_time_travels(spark, tmp_path):
-    """Each batch commits a snapshot of the history; current == full
-    rebuild, intermediate versions == rebuild over their prefix."""
-    import datetime as dt
-
-    from beast_spark.streaming.dimensions import VersionedScd2Maintainer
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def at(d):
-        return t0 + dt.timedelta(days=d)
-
-    b0 = [(1, 1, at(0), "A"), (2, 1, at(0), "X")]
-    b1 = [(1, 2, at(1), "B")]
-    m = VersionedScd2Maintainer(str(tmp_path / "vhist"), **ARGS)
-    m.apply_batch(_rows(spark, b0), 0)
-    m.apply_batch(_rows(spark, b1), 1)
-    m.apply_batch(_rows(spark, b1), 1)  # replay: no-op
-    assert m.versions() == [1, 2]
-    assert m.applied_batches() == {0, 1}
-    assert _histset(m.read_history(spark)) == _histset(
-        scd2_from_changelog(_rows(spark, b0 + b1), **ARGS)
-    )
-    assert _histset(m.read(spark, version=1)) == _histset(
-        scd2_from_changelog(_rows(spark, b0), **ARGS)
-    )
-
-
-def test_versioned_maintainer_exposes_history_path(tmp_path):
-    """The backend-generic history_path accessor must work on BOTH commit
-    backends (SwapCommittedTable stores .path, VersionedTable .root —
-    the versioned variant aliases it)."""
-    from beast_spark.streaming.dimensions import VersionedScd2Maintainer
-
-    root = str(tmp_path / "vhist2")
-    m = VersionedScd2Maintainer(root, **ARGS)
-    assert m.history_path == root
-
-
 def test_scd2_history_as_of_matches_prefix(spark, tmp_path):
     """Generation time travel on the manifest-committed SCD2 maintainer
     (round-13 — the family-wide as_of_gen rollout):

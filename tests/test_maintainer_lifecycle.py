@@ -3,7 +3,8 @@
 Every maintainer in ``beast_spark.streaming`` rides
 ``streaming/swap.py::Maintainer``: the replay no-op and the
 availableNow ``foreachBatch`` wiring live there once, and a maintainer
-supplies only its ``_absorb`` hook. Import-only, no Spark jobs — it
+supplies only its ``_absorb`` hook. Every one commits through
+``ManifestSwapTable``, the one commit protocol. Import-only, no Spark jobs — it
 covers the maintainers whose behavioural suites are too heavy for the
 fast tier (IVF, near-dup, corpus v3, SemDeDup) as well.
 """
@@ -16,7 +17,7 @@ import os
 import pkgutil
 
 import beast_spark.streaming as streaming
-from beast_spark.streaming.swap import Maintainer
+from beast_spark.streaming.swap import Maintainer, ManifestSwapTable
 
 # The only lifecycle overrides left; both call super().
 _OVERRIDES = {
@@ -48,8 +49,6 @@ _EXPECTED = {
     "SessionStatsMaintainer",
     "SketchMaintainer",
     "TokenAccountingMaintainer",
-    "VersionedRollupMaintainer",
-    "VersionedScd2Maintainer",
 }
 
 
@@ -81,6 +80,8 @@ def test_every_maintainer_rides_the_one_lifecycle():
     overrides = set()
     for name, cls in found.items():
         assert issubclass(cls, Maintainer), name
+        # one commit protocol: the manifest flip
+        assert issubclass(cls, ManifestSwapTable), name
         for method in ("apply_batch", "stream_from"):
             if method in vars(cls):
                 overrides.add((name, method))

@@ -259,10 +259,10 @@ def test_corpus_v2_boiler_gate_rounds_like_batch_q124(spark, tmp_path):
     from beast_spark.streaming.corpus_v2 import CorpusV2Maintainer
 
     m = CorpusV2Maintainer(str(tmp_path / "state"))
-    # Hand-write a signals sub-table with boundary counters (a real doc
+    # Hand-commit a signals sub-table with boundary counters (a real doc
     # this size would need >800k tokens — the gate math is what's under
     # test, and survivors() derives everything from `signals`).
-    spark.createDataFrame(
+    signals = spark.createDataFrame(
         [
             # 50001/100000 = 0.50001 -> rnd4 = 0.5000 -> batch PASSES
             (1, "h1", 10, 0.95, 0.0, 100000, 50001),
@@ -271,5 +271,6 @@ def test_corpus_v2_boiler_gate_rounds_like_batch_q124(spark, tmp_path):
         ],
         "doc_id long, text_hash string, n_tokens long, norm_entropy double,"
         " dup_trigram_frac double, n_chunks long, n_boiler long",
-    ).write.parquet(str(tmp_path / "state" / "signals"))
+    )
+    m.commit_delta(None, full={"signals": signals})
     assert {r.doc_id for r in m.survivors(spark).collect()} == {1}

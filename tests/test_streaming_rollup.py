@@ -1,12 +1,15 @@
 """Streaming rollup maintenance: the aggregate table an event stream
 maintains batch-by-batch must equal the from-scratch rollup over all
-rows, replays must be no-ops (swap-committed ledger), and — unlike SCD2
+rows, replays must be no-ops (the manifest's batch ledger), and — unlike SCD2
 — batch ORDER must not matter (merge is commutative/associative)."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+
+import pytest
 
 from beast_spark.operators.rollup import daily_rollup
 from beast_spark.streaming.rollup import RollupMaintainer
@@ -86,14 +89,42 @@ def test_batch_order_does_not_matter(spark, tmp_path):
     assert _rollset(rev.read_rollup(spark)) == want
 
 
-def test_crashed_swap_recovers(spark, tmp_path):
+def test_crashed_commit_leaves_rollup_intact(spark, tmp_path):
+    """A commit that crashed after writing its fragment but before the
+    manifest flip leaves an orphan g<N+1> the reader never sees; the
+    next batch garbage-collects it and merges onto the pre-crash rollup."""
     m = RollupMaintainer(str(tmp_path / "roll"), **ARGS)
     m.apply_batch(_rows(spark, B0), 0)
     want = _rollset(m.read_rollup(spark))
-    # simulate a crash between the two renames: live gone, .replaced left
-    os.rename(m.path, m.path + ".replaced")
-    assert m.read_rollup(spark) is not None  # _recover healed it
-    assert _rollset(m.read_rollup(spark)) == want
+    orphan = os.path.join(m.path, "table", "g2")
+    os.makedirs(orphan)
+    junk = os.path.join(orphan, "junk.parquet")
+    with open(junk, "wb") as fh:
+        fh.write(b"not parquet")
+    assert _rollset(m.read_rollup(spark)) == want  # orphan invisible
+    m.apply_batch(_rows(spark, B1), 1)
+    assert not os.path.exists(junk)  # g2 now holds the real commit
+    assert _rollset(m.read_rollup(spark)) == _rollset(
+        daily_rollup(_rows(spark, B0 + B1), **ARGS)
+    )
+
+
+@pytest.mark.parametrize("layout", ["swap_dir", "replaced_only"])
+def test_old_swap_layout_is_rejected(spark, tmp_path, layout):
+    """State written by the old whole-directory swap must be rebuilt:
+    opening it (or the lone .replaced a crash mid-swap left) as empty
+    state while the checkpoint skips the committed batches would lose
+    them silently."""
+    path = str(tmp_path / "roll")
+    live = path if layout == "swap_dir" else path + ".replaced"
+    _rows(spark, B0).write.parquet(live)
+    with open(os.path.join(live, "_applied_batches.json"), "w") as fh:
+        json.dump([0], fh)
+    m = RollupMaintainer(path, **ARGS)
+    with pytest.raises(ValueError, match="legacy whole-directory swap"):
+        m.apply_batch(_rows(spark, B1), 1)
+    with pytest.raises(ValueError, match="legacy whole-directory swap"):
+        m.read_rollup(spark)
 
 
 def test_sketch_maintainer_matches_batch_sketch(spark, tmp_path):
@@ -134,33 +165,6 @@ def test_sketch_maintainer_matches_batch_sketch(spark, tmp_path):
     g_got = merged_distinct(m.read_sketches(spark)).collect()[0]
     g_want = merged_distinct(sketch_by_slice(allrows, [day], "user_id")).collect()[0]
     assert (g_got.distinct_est, g_got.n_rows) == (g_want.distinct_est, g_want.n_rows)
-
-
-def test_versioned_rollup_maintainer_time_travels(spark, tmp_path):
-    """Each applied batch commits a queryable snapshot; the current one
-    equals the full rebuild; intermediate versions equal the rebuild
-    over their prefix; replay is a no-op (no extra version)."""
-    from beast_spark.streaming.rollup import VersionedRollupMaintainer
-
-    m = VersionedRollupMaintainer(str(tmp_path / "vroll"), **ARGS)
-    m.apply_batch(_rows(spark, B0), 0)
-    m.apply_batch(_rows(spark, B1), 1)
-    m.apply_batch(_rows(spark, B2), 2)
-    m.apply_batch(_rows(spark, B1), 1)  # replay: already in the ledger
-    assert m.versions() == [1, 2, 3]
-    assert m.applied_batches() == {0, 1, 2}
-
-    assert _rollset(m.read_rollup(spark)) == _rollset(
-        daily_rollup(_rows(spark, B0 + B1 + B2), **ARGS)
-    )
-    # time travel: the rollup as-of batch 1
-    assert _rollset(m.read(spark, version=2)) == _rollset(
-        daily_rollup(_rows(spark, B0 + B1), **ARGS)
-    )
-    # retention: vacuum to the newest keep_versions, current stays live
-    m.vacuum()
-    assert m.versions() == [1, 2, 3]  # keep_versions=3 default: nothing dropped
-    assert m.applied_batches() == {0, 1, 2}  # ledger survives vacuum
 
 
 def test_centroid_maintainer_matches_full_build(spark, tmp_path):

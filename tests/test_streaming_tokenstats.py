@@ -105,20 +105,24 @@ def test_empty_maintainer_read_raises_cleanly(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "state"))
 
 
-def test_guard_survives_midswap_crash(spark, tmp_path):
-    """The read guard must run AFTER crash recovery: a crash between the
-    swap's two renames leaves the live dir missing, and an
-    exists()-gated guard would be skipped while the internal recovery
-    then served old-generation counts attributed to a RETRAINED
-    tokenizer (reproduced by review; now fixed in the shared
-    AdditiveStatsMaintainer base)."""
+def test_guard_survives_crashed_commit(spark, tmp_path):
+    """A commit that crashed before the manifest flip leaves an orphan
+    g<N+1> fragment: the read serves the pre-crash counts, the next
+    batch garbage-collects the orphan, and a RETRAINED tokenizer is
+    still refused on read (the marker lives in the manifest, so no
+    crash can leave counts without it)."""
     from beast_spark.streaming.tokenstats import TokenAccountingMaintainer
 
     _seg(spark, str(tmp_path / "seg"), SEG)
     m = TokenAccountingMaintainer(str(tmp_path / "state"), str(tmp_path / "seg"))
     m.apply_batch(_docs(spark, ROWS[:2]), 0)
-    # simulate the mid-swap crash: live dir moved, replacement not in place
-    os.rename(str(tmp_path / "state"), str(tmp_path / "state") + ".replaced")
+    want = {tuple(r) for r in m.read_stats(spark).collect()}
+    orphan = str(tmp_path / "state" / "counts" / "g2")
+    os.makedirs(orphan)
+    junk = os.path.join(orphan, "junk.parquet")
+    with open(junk, "wb") as fh:
+        fh.write(b"not parquet")
+    assert {tuple(r) for r in m.read_stats(spark).collect()} == want
 
     _seg(spark, str(tmp_path / "seg2"), [("aa", 5)])
     m2 = TokenAccountingMaintainer(
@@ -126,8 +130,6 @@ def test_guard_survives_midswap_crash(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="segmentation changed"):
         m2.read_stats(spark)
-    # the original config still reads fine through the healed state
-    m3 = TokenAccountingMaintainer(
-        str(tmp_path / "state"), str(tmp_path / "seg")
-    )
-    assert m3.read_stats(spark).count() == 1
+    m.apply_batch(_docs(spark, ROWS[2:]), 1)
+    assert not os.path.exists(junk)  # g2 now holds the real commit
+    assert m.read_stats(spark).count() == 3
