@@ -28,8 +28,8 @@ the PROBE each trigger runs is O(batch + matched postings) — one
 broadcast of the batch's grams onto one postings scan. The COMMIT
 replaces the cumulative state tables in full (eval-gram-, eval-id-,
 and contaminated-doc-sized — aggregate tables, orders of magnitude
-smaller than the corpus but growing with the eval set); at warehouse scale partition ``contam`` and merge only
-touched partitions. The additivity argument:
+smaller than the corpus but growing with the eval set); at warehouse
+scale partition ``contam`` and merge only touched partitions. The additivity argument:
 
 * a NEW eval doc contributes at most 1 to a train doc's
   ``n_eval_docs`` and never re-contributes (ids are unique — enforced),

@@ -4,9 +4,9 @@ Every maintainer in ``beast_spark.streaming`` rides
 ``streaming/swap.py::Maintainer``: the replay no-op and the
 availableNow ``foreachBatch`` wiring live there once, and a maintainer
 supplies only its ``_absorb`` hook. Every one commits through
-``ManifestSwapTable``, the one commit protocol. Import-only, no Spark jobs — it
-covers the maintainers whose behavioural suites are too heavy for the
-fast tier (IVF, near-dup, corpus v3, SemDeDup) as well.
+``ManifestSwapTable``, the one commit protocol. Import-only, no Spark
+jobs — it covers the maintainers whose behavioural suites are too heavy
+for the fast tier (IVF, near-dup, corpus v3, SemDeDup) as well.
 """
 
 from __future__ import annotations

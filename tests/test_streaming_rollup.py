@@ -1,7 +1,8 @@
 """Streaming rollup maintenance: the aggregate table an event stream
 maintains batch-by-batch must equal the from-scratch rollup over all
-rows, replays must be no-ops (the manifest's batch ledger), and — unlike SCD2
-— batch ORDER must not matter (merge is commutative/associative)."""
+rows, replays must be no-ops (the manifest's batch ledger), and —
+unlike SCD2 — batch ORDER must not matter (merge is
+commutative/associative)."""
 
 from __future__ import annotations
 
@@ -89,9 +90,9 @@ def test_batch_order_does_not_matter(spark, tmp_path):
     assert _rollset(rev.read_rollup(spark)) == want
 
 
-def test_crashed_commit_leaves_rollup_intact(spark, tmp_path):
+def test_crashed_swap_recovers(spark, tmp_path):
     """A commit that crashed after writing its fragment but before the
-    manifest flip leaves an orphan g<N+1> the reader never sees; the
+    manifest swap leaves an orphan g<N+1> the reader never sees; the
     next batch garbage-collects it and merges onto the pre-crash rollup."""
     m = RollupMaintainer(str(tmp_path / "roll"), **ARGS)
     m.apply_batch(_rows(spark, B0), 0)

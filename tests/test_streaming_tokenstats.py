@@ -105,8 +105,8 @@ def test_empty_maintainer_read_raises_cleanly(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "state"))
 
 
-def test_guard_survives_crashed_commit(spark, tmp_path):
-    """A commit that crashed before the manifest flip leaves an orphan
+def test_guard_survives_midswap_crash(spark, tmp_path):
+    """A commit that crashed before the manifest swap leaves an orphan
     g<N+1> fragment: the read serves the pre-crash counts, the next
     batch garbage-collects the orphan, and a RETRAINED tokenizer is
     still refused on read (the marker lives in the manifest, so no
